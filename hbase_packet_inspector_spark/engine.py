@@ -230,7 +230,9 @@ class Engine:
     def stream(self, source_dir: str, sink_tables: dict[str, list],
                **kwargs) -> None:
         """Streaming file-replay mode; kwargs pass through to
-        run_pipeline_available_now (max_files_per_trigger, rocksdb_state)."""
+        run_pipeline_available_now (max_files_per_trigger). For the RocksDB
+        state store, set ``spark.sql.streaming.stateStore.providerClass``
+        on the session first."""
         from .streaming.pipeline import run_pipeline_available_now
 
         run_pipeline_available_now(self.spark, source_dir, sink_tables, **kwargs)

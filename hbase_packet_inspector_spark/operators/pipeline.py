@@ -34,18 +34,10 @@ from ..functions.cellmath import sum_child_cells, zip_actions_results
 from ..schema import (
     ACTION_COLUMNS,
     REQUEST_COLUMNS,
+    REQUEST_MERGE_FIELDS,
     RESPONSE_COLUMNS,
     RESULT_COLUMNS,
     STATE_EXPIRATION_MS,
-)
-
-# Request attributes a response inherits on match (reference merges the
-# pending request map UNDER the response map, hbase.clj:74-84 — so e.g. a
-# mutate response, whose body decodes to nothing, inherits the request's
-# cells; scan/get/multi responses carry their own non-null cells and win).
-_REQ_MERGE_COLS = (
-    "method", "table", "region", "row", "stoprow", "cells", "durability",
-    "caching", "actions",
 )
 
 
@@ -67,7 +59,7 @@ def correlate(events: DataFrame, ttl_ms: int = STATE_EXPIRATION_MS) -> DataFrame
         "elapsed",
         F.when(~F.col("inbound") & F.col("_matched"), gap_ms.cast("int")),
     )
-    for c in _REQ_MERGE_COLS:
+    for c in REQUEST_MERGE_FIELDS:
         df = df.withColumn(
             f"_req_{c}",
             F.when(~F.col("inbound") & F.col("_matched"), F.lag(c).over(w)),
@@ -75,7 +67,7 @@ def correlate(events: DataFrame, ttl_ms: int = STATE_EXPIRATION_MS) -> DataFrame
     # Response-side merge: response's own value wins where present
     # (hbase.clj:74-84 merge order), request fills the rest; a response
     # without a match keeps nulls and method='unknown' (B9).
-    for c in _REQ_MERGE_COLS:
+    for c in REQUEST_MERGE_FIELDS:
         df = df.withColumn(
             c,
             F.when(F.col("inbound"), F.col(c)).otherwise(
@@ -88,7 +80,7 @@ def correlate(events: DataFrame, ttl_ms: int = STATE_EXPIRATION_MS) -> DataFrame
             F.col("method")
         ),
     )
-    return df.drop(*[f"_req_{c}" for c in _REQ_MERGE_COLS])
+    return df.drop(*[f"_req_{c}" for c in REQUEST_MERGE_FIELDS])
 
 
 def scanner_enrich(events: DataFrame, ttl_ms: int = STATE_EXPIRATION_MS) -> DataFrame:

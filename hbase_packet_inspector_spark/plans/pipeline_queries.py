@@ -551,6 +551,7 @@ def _load_hbase_capture(spark: SparkSession):
         from ..sources.fixtures import random_read
         import json as _json
         import struct as _st
+        import tempfile
 
         rows = random_read()
         pkts = []
@@ -565,7 +566,9 @@ def _load_hbase_capture(spark: SparkSession):
             else:
                 pkts.append((r["ts"].timestamp(), r["server"], 16020,
                              r["client"], r["port"], frame))
-        tmp = "/tmp/_hpi_synth.pcap"
+        # no leading "_" or ".": Spark's file listing skips such names
+        # as hidden, and the capture would decode to nothing
+        tmp = os.path.join(tempfile.gettempdir(), "hpi_synth.pcap")
         with open(tmp, "wb") as f:
             f.write(P.build_pcap(pkts))
         eng.load_pcap(tmp, ports=(16020,), decode="json")

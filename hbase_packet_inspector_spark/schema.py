@@ -80,6 +80,16 @@ ACTION_COLUMNS = [
 ]
 RESULT_COLUMNS = ACTION_COLUMNS + ["error"]
 
+# Request attributes a response inherits on match, in batch and stream alike
+# (the reference merges the pending request map UNDER the response map,
+# hbase.clj:74-84 — so e.g. a mutate response, whose body decodes to nothing,
+# inherits the request's cells; scan/get/multi responses carry their own
+# non-null cells and win).
+REQUEST_MERGE_FIELDS = (
+    "method", "table", "region", "row", "stoprow", "cells", "durability",
+    "caching", "actions",
+)
+
 # Correlation-state TTL (event-time ms) — reference core.clj:69-72.
 STATE_EXPIRATION_MS = 120_000
 

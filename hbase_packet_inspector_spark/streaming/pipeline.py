@@ -6,7 +6,11 @@ and/or the JSON sink. The per-connection hash-map state of the reference's
 single handler thread (core.clj:156-207) becomes ``applyInPandasWithState``
 state: pending requests keyed by call_id, expired by event-time TTL against
 the connection's latest packet timestamp — the reference's exact expiry rule
-(core.clj:285-296: event time, not wall clock).
+(core.clj:285-296: event time, not wall clock). Like the reference's map, a
+pending entry holds the request's attributes including its ``actions``, so
+the operator emits complete events (own ``results`` kept, request
+``actions`` merged onto the response) and each sink finalizes the
+micro-batch it is handed without reading the source again.
 
 Batch/stream parity: tests/test_streaming.py replays the same fixture
 workloads through this operator and asserts the outputs match
@@ -20,6 +24,7 @@ import warnings
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -27,34 +32,24 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..schema import RPC_EVENT_SCHEMA, STATE_EXPIRATION_MS
-
-# Request attributes carried across to the matched response (hbase.clj:74-84
-# — the request map merges UNDER the response map, so a mutate response with
-# no decoded cells inherits the request's).
-_MERGE_FIELDS = (
-    "method", "table", "region", "row", "stoprow", "cells", "durability",
-    "caching",
-)
+from ..schema import REQUEST_MERGE_FIELDS, RPC_EVENT_SCHEMA, STATE_EXPIRATION_MS
 
 
 def _scalar(v):
-    """pandas null-normalize: numeric nullable columns surface as NaN in
-    the Arrow batches — treat those as None so merge and JSON state behave."""
+    """pandas null-normalize: numeric nullable columns surface as NaN and
+    array columns as ndarrays in the Arrow batches — NaN becomes None and
+    arrays become lists so merge and JSON state behave."""
+    if isinstance(v, np.ndarray):
+        return v.tolist()
     return None if v is None or (isinstance(v, float) and v != v) else v
 
-# Output: the correlated event stream (requests unchanged; responses merged,
-# with elapsed; unknown responses flagged) — scanner enrichment and routing
-# run downstream in foreachBatch via the batch operators.
+
+# Output: the correlated event stream, every rpc_events column kept
+# (requests unchanged; responses merged with their request, actions
+# included, plus elapsed; unknown responses flagged) — finalization and
+# routing run downstream in foreachBatch via the batch operators.
 CORRELATED_SCHEMA = T.StructType(
-    [f for f in RPC_EVENT_SCHEMA.fields if f.name not in ("actions", "results")]
-    + [
-        T.StructField("elapsed", T.IntegerType()),
-        # event_id of the matched request: lets the downstream batch rejoin
-        # the request's array columns (actions) without carrying arrays
-        # through the Arrow state boundary
-        T.StructField("req_event_id", T.LongType()),
-    ]
+    RPC_EVENT_SCHEMA.fields + [T.StructField("elapsed", T.IntegerType())]
 )
 
 _STATE_SCHEMA = T.StructType([T.StructField("pending", T.StringType())])
@@ -65,7 +60,7 @@ def _correlate_stateful(
 ) -> Iterator[pd.DataFrame]:
     """Stateful handler body for one (client, port) connection.
 
-    State: JSON {"pending": {call_id -> {ts_ms, merge fields}},
+    State: JSON {"pending": {call_id -> {ts_ms, REQUEST_MERGE_FIELDS}},
     "scanners": {scanner_id -> {table, region, ts_ms}},
     "latest_ms": <latest packet event time>}. Semantics mirror
     the reference's single state map: request stores/overwrites, response
@@ -135,7 +130,7 @@ def _correlate_group_evict(
 _WARNED_UNBOUNDED_STATE = False
 
 
-def _warn_unbounded_state(fn_name: str) -> None:
+def _warn_unbounded_state() -> None:
     """One-time heads-up that ``watermark=None`` means NO idle-connection
     state eviction. The default changed from "2 minutes" to None in
     round 10 (replay safety: a watermark default silently dropped
@@ -148,7 +143,7 @@ def _warn_unbounded_state(fn_name: str) -> None:
         return
     _WARNED_UNBOUNDED_STATE = True
     warnings.warn(
-        f"{fn_name}(watermark=None): idle-connection state rows are "
+        "stream_correlate(watermark=None): idle-connection state rows are "
         "never evicted — fine for bounded archive replays "
         "(availableNow / finite file feeds), but a LIVE deployment "
         "must pass e.g. watermark='2 minutes' or state grows without "
@@ -182,7 +177,7 @@ def stream_correlate(
     now always an explicit caller decision."""
     if watermark is None:
         if events.isStreaming:
-            _warn_unbounded_state("stream_correlate")
+            _warn_unbounded_state()
         return events.groupBy("client", "port").applyInPandasWithState(
             _correlate_group,
             outputStructType=CORRELATED_SCHEMA,
@@ -203,40 +198,6 @@ def stream_correlate(
     )
 
 
-def _reattach_arrays(spark, source_dir: str, batch_df: DataFrame) -> DataFrame:
-    """Re-attach the array columns the Arrow state boundary dropped: own
-    results by event_id; the matched REQUEST's actions by req_event_id
-    (responses) / event_id (requests).
-
-    The source scan is pruned to the batch's event_id RANGE (req_event_id
-    <= event_id always — a request precedes its response), which parquet
-    row-group min/max stats turn into real IO pruning. Without it every
-    micro-batch re-reads the WHOLE source: replaying F files one per
-    trigger would cost O(F²) file reads."""
-    keyed = batch_df.withColumn(
-        "_aid",
-        F.when(F.col("inbound"), F.col("event_id")).otherwise(
-            F.col("req_event_id")
-        ),
-    ).withColumn("_rid", F.col("event_id"))
-    bounds = keyed.agg(
-        F.least(F.min("_aid"), F.min("_rid")).alias("lo"),
-        F.greatest(F.max("_aid"), F.max("_rid")).alias("hi"),
-    ).collect()[0]
-    src = spark.read.schema(RPC_EVENT_SCHEMA).parquet(source_dir)
-    if bounds.lo is not None:
-        src = src.where(F.col("event_id").between(bounds.lo, bounds.hi))
-    acts = src.select(F.col("event_id").alias("_aid"), F.col("actions").alias("_a"))
-    ress = src.select(F.col("event_id").alias("_rid"), F.col("results").alias("_r"))
-    return (
-        keyed.join(acts, "_aid", "left")
-        .join(ress, "_rid", "left")
-        .withColumn("actions", F.col("_a"))
-        .withColumn("results", F.col("_r"))
-        .drop("_aid", "_rid", "_a", "_r", "req_event_id")
-    )
-
-
 def _run_correlated_stream(
     spark, source_dir: str, sink_fn, checkpoint: str,
     max_files_per_trigger: int | None = None,
@@ -244,8 +205,10 @@ def _run_correlated_stream(
 ) -> None:
     """Shared runner for the file-replay modes: schema'd streaming reader ->
     stateful correlation -> foreachBatch(sink_fn) with availableNow + the
-    given checkpoint. Every mode keys its OWN checkpoint: a shared one would
-    make a second run see all files committed and silently emit nothing.
+    given checkpoint. ``sink_fn`` gets complete correlated events
+    (CORRELATED_SCHEMA). Every mode keys its OWN checkpoint: a shared one
+    would make a second run see all files committed and silently emit
+    nothing.
 
     Replay runs default to ``watermark=None`` (no late-data drop, no
     idle-state eviction): the file source orders micro-batches by file,
@@ -271,7 +234,6 @@ def _run_correlated_stream(
 def run_pipeline_available_now(
     spark, source_dir: str, sink_tables: dict[str, list],
     max_files_per_trigger: int | None = None,
-    rocksdb_state: bool = False,
 ) -> None:
     """File-replay mode: stream the rpc_events parquet directory through the
     stateful correlation + scanner machine, fan out per micro-batch into the
@@ -279,23 +241,16 @@ def run_pipeline_available_now(
     deployment writes Delta/parquet instead). Mirrors reference file mode
     with the streaming engine (trigger=availableNow, graceful stop).
     ``max_files_per_trigger`` forces multi-micro-batch execution — tests use
-    it to prove state survives batch boundaries."""
+    it to prove state survives batch boundaries. The state store is the
+    session's: set ``spark.sql.streaming.stateStore.providerClass`` to
+    RocksDB before the call for off-heap, spillable state."""
     from ..operators.pipeline import finalize_and_route
 
-    if rocksdb_state:
-        # off-heap spillable state — the memory-pressure answer the
-        # reference solves by DROPPING state (B11); Spark spills instead
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        full = _reattach_arrays(spark, source_dir, batch_df)
-        # scanner enrichment already happened statefully upstream (cross-
-        # batch correct); only finalization + routing remain per batch
-        for name, df in finalize_and_route(full).items():
+        # the micro-batch holds complete correlated events, scanner
+        # enrichment included (cross-batch correct, upstream state); only
+        # finalization + routing remain per batch
+        for name, df in finalize_and_route(batch_df).items():
             sink_tables.setdefault(name, []).extend(df.collect())
 
     _run_correlated_stream(
@@ -310,7 +265,8 @@ def run_pipeline_to_parquet(
 ) -> None:
     """Streaming file-replay mode with a durable parquet sink — the
     production form of run_pipeline_available_now (which collects into
-    Python lists for tests).
+    Python lists for tests). Each micro-batch is finalized and routed as
+    the stateful correlator hands it over.
 
     Exactly-once: Structured Streaming's checkpoint makes micro-batch
     replay possible after a crash, and the sink stays correct under replay
@@ -325,8 +281,7 @@ def run_pipeline_to_parquet(
     from ..operators.pipeline import finalize_and_route
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        full = _reattach_arrays(spark, source_dir, batch_df)
-        for name, df in finalize_and_route(full).items():
+        for name, df in finalize_and_route(batch_df).items():
             df.write.mode("overwrite").parquet(
                 f"{out_dir}/{name}/batch_id={batch_id}"
             )
@@ -388,8 +343,9 @@ def run_pipeline_to_kafka(
     checkpoint_dir: str | None = None,
 ) -> None:
     """The reference's kafka mode as a stream: stateful correlation ->
-    finalize (the send! record) -> JSON (topic, value) routing per the
-    kafka spec, per micro-batch. With a broker, swap the collect for
+    finalize (the send! record, straight off the correlated micro-batch)
+    -> JSON (topic, value) routing per the kafka spec, per micro-batch.
+    With a broker, swap the collect for
     ``batch.write.format('kafka')`` (compression gzip per the reference);
     ``records_out`` collects the records for tests/offline dumps.
 
@@ -408,9 +364,9 @@ def run_pipeline_to_kafka(
         checkpoint_dir = f"{source_dir}/_kafka_checkpoint_{tag}"
 
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        full = _reattach_arrays(spark, source_dir, batch_df)
         recs = to_kafka_records(
-            finalize(full), cfg["topic1"], cfg["topic2"], cfg["extra"], hostname
+            finalize(batch_df), cfg["topic1"], cfg["topic2"], cfg["extra"],
+            hostname,
         )
         if records_out is not None:
             records_out.extend(recs.collect())
@@ -600,26 +556,21 @@ def stream_range_join(
 
 
 def _correlate_rows(pending: dict, scanners: dict, pdf: pd.DataFrame) -> pd.DataFrame:
-    """The pure per-batch correlation + scanner-machine step shared by the
-    applyInPandasWithState handler above and the transformWithState
-    processor below (single source of truth for the semantics)."""
+    """The pure per-batch correlation + scanner-machine step of the
+    applyInPandasWithState handler above."""
     pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
     out_rows = []
     for row in pdf.to_dict("records"):
-        row.pop("actions", None)
-        row.pop("results", None)
         ts_ms = int(row["ts"].value // 1_000_000)
         for d in (pending, scanners):
             for k in [k for k, v in d.items()
                       if ts_ms - v["ts_ms"] > STATE_EXPIRATION_MS]:
                 del d[k]
         cid = str(row["call_id"])
-        row["req_event_id"] = None
         if row["inbound"]:
             pending[cid] = {
                 "ts_ms": ts_ms,
-                "event_id": int(row["event_id"]),
-                **{f: _scalar(row.get(f)) for f in _MERGE_FIELDS},
+                **{f: _scalar(row.get(f)) for f in REQUEST_MERGE_FIELDS},
             }
             row["elapsed"] = None
         else:
@@ -628,11 +579,10 @@ def _correlate_rows(pending: dict, scanners: dict, pdf: pd.DataFrame) -> pd.Data
                 row["method"] = "unknown"
                 row["elapsed"] = None
             else:
-                for f in _MERGE_FIELDS:
+                for f in REQUEST_MERGE_FIELDS:
                     if _scalar(row.get(f)) is None:
                         row[f] = req[f]
                 row["elapsed"] = ts_ms - req["ts_ms"]
-                row["req_event_id"] = req["event_id"]
         sid = row.get("scanner")
         if sid is not None and not pd.isna(sid):
             sid, method = str(int(sid)), row.get("method")
@@ -657,85 +607,6 @@ def _correlate_rows(pending: dict, scanners: dict, pdf: pd.DataFrame) -> pd.Data
                     scanners.pop(sid, None)
         out_rows.append(row)
     return pd.DataFrame(out_rows, columns=[f.name for f in CORRELATED_SCHEMA])
-
-
-def stream_correlate_tws(
-    events: DataFrame, *, watermark: str | None = None
-) -> DataFrame:
-    """Correlation on ``transformWithStateInPandas`` — the Spark 4 successor
-    of applyInPandasWithState (typed state handles, timer support, RocksDB
-    required). Same semantics as stream_correlate (both call
-    _correlate_rows); kept as a parallel implementation so the engine can
-    migrate when the older API is retired.
-
-    Idle-connection lifecycle: with a ``watermark`` (live-mode opt-in;
-    the default ``None`` keeps the replay-safe unbounded-state
-    behavior — see stream_correlate), runs in
-    eventTime timeMode and arms a per-key TIMER at latest packet + TTL —
-    re-armed on every batch with traffic, so it fires only once the
-    watermark passes an idle connection's latest packet + TTL, and
-    ``handleExpiredTimer`` then clears the state row (the timer analog
-    of the applyInPandasWithState path's EventTimeTimeout eviction;
-    reference trim-state, core.clj:285-296). ``watermark=None`` (the
-    default) is the unbounded-state replay behavior (timeMode "None").
-
-    Runtime requirements beyond stream_correlate: the RocksDB state store
-    AND the ``google.protobuf`` Python package (the TWS state-server
-    protocol uses it; absent in codec-free containers — the equivalence
-    test importorskips on it)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    use_timers = watermark is not None
-    if watermark is None and events.isStreaming:
-        _warn_unbounded_state("stream_correlate_tws")
-
-    class CorrelateProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState("correlate_state", "blob STRING")
-
-        def handleInputRows(self, key, rows, timerValues):
-            blob = self._state.get()
-            st = json.loads(blob[0]) if blob else {}
-            pending = st.get("pending", {})
-            scanners = st.get("scanners", {})
-            latest_ms = st.get("latest_ms", 0)
-            for pdf in rows:
-                if len(pdf):
-                    latest_ms = max(
-                        latest_ms, int(pdf["ts"].max().value // 1_000_000))
-                yield _correlate_rows(pending, scanners, pdf)
-            self._state.update(
-                (json.dumps({"pending": pending, "scanners": scanners,
-                             "latest_ms": latest_ms}),)
-            )
-            if use_timers:
-                # re-arm the single idle timer at latest + TTL (delete
-                # any stale one so exactly one timer rides per key)
-                for t in self._handle.listTimers():
-                    self._handle.deleteTimer(t)
-                self._handle.registerTimer(
-                    latest_ms + STATE_EXPIRATION_MS)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # watermark passed latest + TTL with no new packets: the
-            # connection is dead — drop its state row entirely
-            self._state.clear()
-            return iter([])
-
-        def close(self) -> None:
-            pass
-
-    src = events.withWatermark("ts", watermark) if use_timers else events
-    return src.groupBy("client", "port").transformWithStateInPandas(
-        CorrelateProcessor(),
-        outputStructType=CORRELATED_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime" if use_timers else "None",
-    )
 
 
 SCD2_STREAM_SCHEMA = T.StructType([

@@ -36,22 +36,27 @@ def workload():
 
 
 def test_streaming_matches_batch(spark, tmp_path, workload):
-    src = str(tmp_path / "events")
-    fx.to_df(spark, workload).write.parquet(src)
-
-    sink: dict[str, list] = {}
-    run_pipeline_available_now(spark, src, sink)
-
-    batch = {
-        name: df.collect()
-        for name, df in build_tables(fx.to_df(spark, workload)).items()
-    }
+    # second input: every connection numbers its events from 0, as
+    # decode_hbase_frames does — event_id is unique only per connection
+    per_conn = [dict(r, port=40000) for r in fx.random_read()] + [
+        dict(r, port=40001) for r in fx.sequential_write()]
 
     def key(rows):
         return sorted(tuple(str(x) for x in r) for r in rows)
 
-    for name in ("requests", "responses", "actions", "results"):
-        assert key(sink.get(name, [])) == key(batch[name]), name
+    for i, rows in enumerate((workload, per_conn)):
+        src = str(tmp_path / f"events{i}")
+        fx.to_df(spark, rows).write.parquet(src)
+
+        sink: dict[str, list] = {}
+        run_pipeline_available_now(spark, src, sink)
+
+        batch = {
+            name: df.collect()
+            for name, df in build_tables(fx.to_df(spark, rows)).items()
+        }
+        for name in ("requests", "responses", "actions", "results"):
+            assert key(sink.get(name, [])) == key(batch[name]), (i, name)
 
 
 def test_kafka_spec_parser():
@@ -181,8 +186,12 @@ def test_rocksdb_state_store(spark, tmp_path):
     fx.to_df(spark, fx.random_read()).write.parquet(src)
     sink: dict[str, list] = {}
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
     try:
-        run_pipeline_available_now(spark, src, sink, rocksdb_state=True)
+        run_pipeline_available_now(spark, src, sink)
     finally:
         if prev:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
@@ -190,49 +199,6 @@ def test_rocksdb_state_store(spark, tmp_path):
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     assert len(sink["requests"]) == 5 and len(sink["responses"]) == 5
     assert all(r.elapsed is not None for r in sink["responses"])
-
-
-def test_transform_with_state_matches_apply_in_pandas(spark, tmp_path, workload):
-    """The transformWithStateInPandas implementation must produce exactly
-    the applyInPandasWithState outputs (both share _correlate_rows; this
-    pins the state plumbing). TWS requires the RocksDB state store and the
-    protobuf wheel (its state-server wire protocol)."""
-    pytest.importorskip("google.protobuf")
-    from hbase_packet_inspector_spark.streaming.pipeline import (
-        stream_correlate,
-        stream_correlate_tws,
-    )
-
-    src = str(tmp_path / "events")
-    fx.to_df(spark, workload).write.parquet(src)
-
-    def run(factory, ckpt):
-        events = spark.readStream.schema(fx.RPC_EVENT_SCHEMA).parquet(src)
-        out: list = []
-        q = (
-            factory(events)
-            .writeStream.foreachBatch(lambda df, _id: out.extend(df.collect()))
-            .option("checkpointLocation", str(tmp_path / ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return sorted(tuple(str(x) for x in r) for r in out)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        tws = run(stream_correlate_tws, "ck_tws")
-        base = run(stream_correlate, "ck_apply")
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    assert tws == base and len(tws) > 0
 
 
 def test_kafka_json_round_trip(spark):
@@ -263,7 +229,10 @@ def test_streaming_kafka_json_consumer(spark, tmp_path):
     a fleet collector lands from the topics) -> readStream.text ->
     from_kafka_records -> stateful correlation -> correlated responses.
     Proves the whole live-mode composition runs under Structured Streaming
-    with the same operators as batch."""
+    with the same operators as batch, and that the correlated stream is
+    complete without a parquet source: responses carry their request's
+    actions into finalize."""
+    from hbase_packet_inspector_spark.operators.pipeline import finalize
     from hbase_packet_inspector_spark.streaming.pipeline import stream_correlate
     from hbase_packet_inspector_spark.streaming.sink import (
         from_kafka_records,
@@ -282,7 +251,8 @@ def test_streaming_kafka_json_consumer(spark, tmp_path):
     correlated = stream_correlate(from_kafka_records(stream))
     out: list = []
     q = (
-        correlated.writeStream.foreachBatch(lambda df, _id: out.extend(df.collect()))
+        correlated.writeStream.foreachBatch(
+            lambda df, _id: out.extend(finalize(df).collect()))
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(availableNow=True)
         .start()
@@ -292,6 +262,7 @@ def test_streaming_kafka_json_consumer(spark, tmp_path):
     responses = [r for r in out if not r.inbound]
     assert len(responses) == 5
     assert all(r.method == "multi" and r.elapsed is not None for r in responses)
+    assert all(r.batch == 20 for r in responses)
 
 
 def test_parquet_sink_exactly_once(spark, tmp_path, workload):
